@@ -27,7 +27,9 @@ object Pipelines {
   /** Same pipeline over an existing sequences table (the bench materializes
     * the generated table to parquet once so both parallelism levels scan
     * identical bytes — and so the measured stage is scan + features + join,
-    * not synthetic-data generation). */
+    * not synthetic-data generation). Joined by the as-of reference spec
+    * (`AsOf.referenceJoin`), so it checks [[asofFeaturePipelineNativeOver]]
+    * against an independent implementation. */
   def asofFeaturePipelineOver(seqs: DataFrame,
       step: Int = 8, block: Int = 16, queriesPerDoc: Int = 4): DataFrame = {
     // window-feature stage: per-frame mean-square token value — native
@@ -45,12 +47,12 @@ object Pipelines {
       .select(col("doc_id"),
         pmod(abs(xxhash64(col("doc_id"), col("k"))),
           greatest(col("n_tok").cast("long"), lit(1L)) * 1000000L).as("ts"))
-    AsOf.join(queries, features, "doc_id", "ts", Seq("fv"))
+    AsOf.referenceJoin(queries, features, "doc_id", "ts", Seq("fv"))
   }
 
-  /** Same pipeline using the NATIVE Catalyst as-of operator
+  /** Same pipeline on the production as-of join
     * (graft.plans.AsOfJoinExec): single-pass sort-merge-carry, no window
-    * buffering; plan = 1 exchange + 1 sort per side.
+    * buffering.
     *
     * Shuffle diet (guide §2.3/§8): both sides are exchanged as the
     * COMPACT per-doc rows — (doc_id, frame-array) and (doc_id, n_tok) —
@@ -68,30 +70,26 @@ object Pipelines {
     // by key (one row per doc) and exploding afterwards yields a stream
     // that is already (doc_id, ts)-sorted — frame positions explode in
     // ascending ts order, and the query timestamps are array_sort'ed
-    // in-row before the explode. AsOfNative.assumeSorted declares that
-    // ordering to the planner (skipping two full sorts of the exploded
-    // timelines); the merge VERIFIES the claim row-by-row, so a future
-    // edit breaking the invariant fails loudly (see AssumeOrderedNode).
-    // The inner assumeSorted (on the compact rows) doubles as a
-    // predicate-pushdown BARRIER: InferFiltersFromGenerate adds a
-    // size(child)>0 filter before every explode, and pushdown would
-    // substitute the frame-energy expression into it — evaluating the
-    // frame loop up to 3x per row (the guide §4.4 duplication, in JVM
-    // form). Above the barrier the inferred filter tests the already-
-    // computed column instead.
-    val compactF = graft.plans.AsOfNative.assumeSorted(seqs
+    // in-row before the explode. The join is therefore `presorted`,
+    // skipping two full sorts of the exploded timelines; the merge
+    // VERIFIES every row, so a future edit breaking the invariant fails
+    // loudly. The PlanBarrier on each compact side is a predicate-
+    // pushdown barrier: InferFiltersFromGenerate adds a size(child)>0
+    // filter before every explode, and pushdown would substitute the
+    // frame-energy expression into it — evaluating the frame loop up to
+    // 3x per row (the guide §4.4 duplication, in JVM form). Above the
+    // barrier the inferred filter tests the already-computed column.
+    val compactF = graft.plans.PlanBarrier(seqs
       .withColumn("df",
         graft.functions.FrameAgg.energy(col("tokens"), step, block))
       .select(col("doc_id"), col("df"))
       .repartition(parts, col("doc_id"))
-      .sortWithinPartitions("doc_id"),
-      "doc_id")
-    val features = graft.plans.AsOfNative.assumeSorted(compactF
+      .sortWithinPartitions("doc_id"))
+    val features = compactF
       .select(col("doc_id"), posexplode(col("df")))
       .select(col("doc_id"), (col("pos") * step * 1000000L).as("ts"),
-        col("col").as("fv")),
-      "doc_id", "ts")
-    val compactQ = graft.plans.AsOfNative.assumeSorted(seqs
+        col("col").as("fv"))
+    val compactQ = graft.plans.PlanBarrier(seqs
       .select(col("doc_id"), col("n_tok"))
       .repartition(parts, col("doc_id"))
       .sortWithinPartitions("doc_id")
@@ -99,12 +97,9 @@ object Pipelines {
         array_sort(transform(sequence(lit(0), lit(queriesPerDoc - 1)),
           k => pmod(abs(xxhash64(col("doc_id"), k)),
             greatest(col("n_tok").cast("long"), lit(1L)) * 1000000L)))
-          .as("tsArr")),
-      "doc_id")
-    val queries = graft.plans.AsOfNative.assumeSorted(compactQ
-      .select(col("doc_id"), explode(col("tsArr")).as("ts")),
-      "doc_id", "ts")
-    graft.plans.AsOfNative.join(queries, features, "doc_id", "ts", Seq("fv"))
+          .as("tsArr")))
+    val queries = compactQ.select(col("doc_id"), explode(col("tsArr")).as("ts"))
+    AsOf.join(queries, features, "doc_id", "ts", Seq("fv"), presorted = true)
   }
 
   /** Co-located fast path: when the feature timeline is a dense GRID

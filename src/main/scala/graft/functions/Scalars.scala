@@ -12,10 +12,6 @@ object Scalars {
   def hzToMidi(freq: Column): Column =
     round(lit(69.0) + lit(12.0) * log2(freq / 440.0)).cast("int")
 
-  /** seconds (double col) -> integer ns; the engine's RealTime::fromSeconds. */
-  def secondsToNs(sec: Column): Column =
-    round(sec.cast("double") * 1e9).cast("long")
-
   /** ns -> frame index at rate (realTime2Frame,
     * FeatureExtractionManager.cpp:819-822). */
   def nsToFrame(ns: Column, rateHz: Double): Column =
@@ -24,14 +20,6 @@ object Scalars {
   /** frame index -> ns (frame2RealTime, FeatureExtractionManager.cpp:941). */
   def frameToNs(frame: Column, rateHz: Double): Column =
     (frame.cast("double") * (1e9 / rateHz)).cast("long")
-
-  /** NaN/Inf -> string forms for JSON-ish sinks
-    * (runner/JAMSFeatureWriter.cpp:177-181). */
-  def numOrSpecial(c: Column): Column =
-    when(isnan(c), lit("NaN"))
-      .when(c === Double.PositiveInfinity, lit("Inf"))
-      .when(c === Double.NegativeInfinity, lit("-Inf"))
-      .otherwise(c.cast("string"))
 
   /** transform-id sanitization for filenames: ':' -> '_'
     * (tests/test-csv-destinations/test-csv-destinations.sh:9-10). */

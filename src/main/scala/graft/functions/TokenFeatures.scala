@@ -36,10 +36,6 @@ object TokenFeatures {
   private[graft] def fingerprintHof(tokens: Column): Column =
     aggregate(tokens, lit(0L), (acc, t) => (acc * 31L + t.cast("long")) % P)
 
-  /** Whitespace token count. */
-  def tokenCountWs(text: Column): Column =
-    size(split(text, "\\s+"))
-
   /** BPE-ish token count: letters runs, digit runs, and single non-space
     * punctuation marks each count as one token — the way a byte-pair
     * pre-tokenizer segments before merging. */

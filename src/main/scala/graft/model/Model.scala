@@ -47,10 +47,6 @@ object OutputShape {
   case object GridOSS      extends OutputShape { val id = "grid-oss" }      // vector per step
   case object GridFSR      extends OutputShape { val id = "grid-fsr" }
   case object NotesRegions extends OutputShape { val id = "notes-regions" } // (ts, dur, value, label)
-  val all: Seq[OutputShape] =
-    Seq(Instants, CurveOSS, CurveFSR, CurveVSR, GridOSS, GridFSR, NotesRegions)
-  def fromId(s: String): OutputShape =
-    all.find(_.id == s).getOrElse(throw new IllegalArgumentException(s"unknown shape: $s"))
 }
 
 /** The nine summary reducers (reference dispatcher:

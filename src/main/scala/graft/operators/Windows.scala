@@ -4,11 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-/** Windowed timeline operators: lag/lead, forward-fill backfill, and
+/** Windowed timeline operators: fill-ends, forward-fill backfill, and
   * gap-based sessionization (north_rule surface).
   *
   * Reference semantics these generalize:
-  *   - lag/lead: the CSV/Lab writers' `fill-ends`/`end-times` options set a
+  *   - fill-ends (lead): the CSV/Lab writers' `fill-ends`/`end-times` options set a
   *     feature's end to the NEXT feature's start
   *     (/root/reference/runner/LabFeatureWriter.cpp:117-130,150-152;
   *     goldens tests/test-csv-writer/expected/curve-vsr-fill-ends.csv).
@@ -26,16 +26,6 @@ object Windows {
 
   def byEntity(entityCol: String, tsCol: String): WindowSpec =
     Window.partitionBy(col(entityCol)).orderBy(col(tsCol).asc)
-
-  /** Append lag/lead columns of `valueCol` over the entity timeline. */
-  def lagLead(df: DataFrame, entityCol: String, tsCol: String,
-      valueCol: String, offsets: Seq[Int] = Seq(1)): DataFrame = {
-    val w = byEntity(entityCol, tsCol)
-    offsets.foldLeft(df) { (d, k) =>
-      d.withColumn(s"${valueCol}_lag$k", lag(col(valueCol), k).over(w))
-        .withColumn(s"${valueCol}_lead$k", lead(col(valueCol), k).over(w))
-    }
-  }
 
   /** End-times projection: end = ts + duration when duration is present,
     * else the next feature's ts, else (last row) the row's own ts —
@@ -120,7 +110,8 @@ object Windows {
     // fail-loudly conventions: no silent column clobbering, and the
     // (partition, group) offset collect below is bounded by an explicit
     // guard rather than a comment (see maxOffsetRows)
-    val clash = Seq(outCol, "__pid", "__gcount").filter(df.columns.contains)
+    val clash = Seq(outCol, "__pid", "__gcount", "__opid", "__g", "__offset")
+      .filter(df.columns.contains)
     require(clash.isEmpty,
       s"globalRowNumberByGroup output columns already exist: ${clash.mkString(", ")}")
     val spark = df.sparkSession
@@ -144,7 +135,11 @@ object Windows {
     // one row per (partition, group): explicitly BOUNDED — a
     // high-cardinality group column would otherwise drive an unbounded
     // driver collect; limit N+1 + require fails fast (the Main
-    // --multiplex convention) instead of OOMing mid-collect
+    // --multiplex convention) instead of OOMing mid-collect. The bound
+    // is checked only after the counting pass: each task holds one
+    // running count per distinct group in its partition, so executor
+    // memory grows with the distinct groups per partition — this is for
+    // low-cardinality groups (a few per partition), not per-entity keys.
     val maxOffsetRows = 1000000
     val totals = local.groupBy(col("__pid"), col(groupCol))
       .agg(max(col("__gcount")).as("__t"))

@@ -13,18 +13,22 @@ import org.apache.spark.sql.graftbridge.Bridge
 /** Native Catalyst as-of join: logical node + planner strategy + a
   * single-pass sort-merge-carry physical operator (SURVEY.md §7.3 tier c —
   * built after profiling showed the union+window rewrite pays for buffering
-  * every entity group in WindowExec).
+  * every entity group in WindowExec). Every production as-of runs here;
+  * the entry point is graft.operators.AsOf.join.
   *
-  * Semantics identical to graft.operators.AsOf.join (property-tested):
-  * for each left row, the value columns of the latest right row with
-  * rightTs <= leftTs (strict: <) on the same entity, plus matched_ts;
-  * zero temporal leakage by construction — the merge NEVER reads a right
-  * row past the current left timestamp.
+  * Semantics identical to the reference spec graft.operators.AsOf.referenceJoin
+  * (property-tested): for each left row, the value columns of the latest
+  * right row with rightTs <= leftTs (strict: <) on the same entity, plus
+  * matched_ts; zero temporal leakage by construction — the merge NEVER
+  * reads a right row past the current left timestamp.
   *
   * Physical properties: both children clustered on the entity key and
   * sorted by (entity, ts) — EnsureRequirements inserts exactly one
   * exchange + one sort per side (same as a SortMergeJoin); the merge is
   * O(1) state per row: one carried value row, no per-group buffering.
+  * `presorted` drops the sort requirement (distribution is still
+  * required): the caller asserts both sides already stream in
+  * (entity, ts) order, and the merge verifies every row it reads.
   *
   * Key/ts/value columns are held as real Attributes so column pruning and
   * the optimizer see this node's references.
@@ -38,6 +42,7 @@ case class AsOfJoinNode(
     rightTs: Attribute,
     rightValues: Seq[Attribute],
     strict: Boolean,
+    presorted: Boolean,
     // constructor param so copy()/withNewChildren keep the exprId stable
     matchedTs: AttributeReference) extends BinaryNode {
 
@@ -59,6 +64,7 @@ case class AsOfJoinExec(
     rightTs: Attribute,
     rightValues: Seq[Attribute],
     strict: Boolean,
+    presorted: Boolean,
     matchedTs: AttributeReference,
     left: SparkPlan,
     right: SparkPlan) extends BinaryExecNode {
@@ -72,9 +78,11 @@ case class AsOfJoinExec(
     ClusteredDistribution(Seq(leftEntity)) ::
       ClusteredDistribution(Seq(rightEntity)) :: Nil
 
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    Seq(SortOrder(leftEntity, Ascending), SortOrder(leftTs, Ascending)),
-    Seq(SortOrder(rightEntity, Ascending), SortOrder(rightTs, Ascending)))
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
+    if (presorted) Seq(Nil, Nil)
+    else Seq(
+      Seq(SortOrder(leftEntity, Ascending), SortOrder(leftTs, Ascending)),
+      Seq(SortOrder(rightEntity, Ascending), SortOrder(rightTs, Ascending)))
 
   override def outputPartitioning: Partitioning = left.outputPartitioning
   override def outputOrdering: Seq[SortOrder] = left.outputOrdering
@@ -98,8 +106,8 @@ case class AsOfJoinExec(
     val rightOut = right.output
     val entityOrd0 = org.apache.spark.sql.catalyst.util.TypeUtils
       .getInterpretedOrdering(leftEntity.dataType)
-    // ts columns are REQUIRED LongType (AsOfNative.join enforces it; the
-    // merge below reads them with primitive getLong — no per-row boxing)
+    // ts columns are REQUIRED LongType (AsOf.join enforces it; the merge
+    // below reads them with primitive getLong — no per-row boxing)
     require(leftTs.dataType == org.apache.spark.sql.types.LongType &&
       rightTs.dataType == org.apache.spark.sql.types.LongType,
       "AsOfJoinExec requires LongType ts columns")
@@ -138,7 +146,6 @@ case class AsOfJoinExec(
       case _ => -1
     }
     val entityType = leftEntity.dataType
-    val tsType = leftTs.dataType
     val rValTypes = rightValues.map(_.dataType)
     val carrySchema = rValTypes :+ rightTs.dataType
     val outAttrs = output
@@ -152,42 +159,66 @@ case class AsOfJoinExec(
       val nullCarry = new SpecificInternalRow(carrySchema)
       carrySchema.indices.foreach(nullCarry.setNullAt)
       var carryEntity: Any = null
-      var carryTsNull = true
-      var carryTs = 0L
       var hasCarry = false
+
+      // Input-ordering verification: the merge is only correct over
+      // (entity, ts)-sorted children. The planner guarantees that unless
+      // the join is `presorted`, whose promise it cannot check — so the
+      // merge verifies as it streams (one compare per row read) and
+      // throws instead of silently emitting wrong matches. Each right row
+      // is checked when it is READ, against the previous row read, and
+      // the rest of the right stream is drained and checked once the
+      // left side runs out: a row that is never absorbed is checked too.
+      def orderViolation(side: String, e: Any, t: Any): Nothing =
+        throw new IllegalStateException(
+          s"as-of merge: $side side not sorted by (entity, ts) — saw " +
+            s"($e, $t) after a later row; a presorted as-of join " +
+            "(AsOf.join(presorted = true)) over unsorted data?")
+
+      // the right head: read and verified, not yet absorbed. Its entity
+      // is copied only when it CHANGES (the sorter reuses row buffers, so
+      // a held reference must be a copy — but one copy per entity, not
+      // one per row); the copy is immutable, so the carry shares it.
       var rHead: InternalRow = null
-      var rHeadDone = !rIter.hasNext
-      if (!rHeadDone) rHead = rIter.next()
+      var rHeadEntity: Any = null
+      var rHeadTsNull = true
+      var rHeadTs = 0L
+      var rHeadDone = false
+      var haveRPrev = false
+      def advanceRight(): Unit =
+        if (rIter.hasNext) {
+          val r = rIter.next()
+          val re = r.get(rEntityIdx, entityType)
+          val rtNull = r.isNullAt(rTsIdx)
+          val rt = if (rtNull) 0L else r.getLong(rTsIdx)
+          if (haveRPrev) {
+            val ec = entityOrd(re, rHeadEntity)
+            if (ec < 0 || (ec == 0 && tsCmp(rtNull, rt, rHeadTsNull, rHeadTs) < 0))
+              orderViolation("right", re, if (rtNull) null else rt)
+            if (ec != 0) rHeadEntity = InternalRow.copyValue(re)
+          } else rHeadEntity = InternalRow.copyValue(re)
+          haveRPrev = true
+          rHead = r
+          rHeadTsNull = rtNull
+          rHeadTs = rt
+        } else { rHeadDone = true; rHead = null }
+      advanceRight()
 
       def rightApplies(le: Any, ltNull: Boolean, lt: Long): Boolean = {
-        val ec = entityOrd(rHead.get(rEntityIdx, entityType), le)
+        val ec = entityOrd(rHeadEntity, le)
         if (ec < 0) true
         else if (ec > 0) false
         else {
-          val rNull = rHead.isNullAt(rTsIdx)
-          val tc = tsCmp(rNull, if (rNull) 0L else rHead.getLong(rTsIdx),
-            ltNull, lt)
+          val tc = tsCmp(rHeadTsNull, rHeadTs, ltNull, lt)
           if (strictB) tc < 0 else tc <= 0
         }
       }
 
-      // Input-ordering verification: the merge is only correct over
-      // (entity, ts)-sorted children. The planner usually guarantees that
-      // via requiredChildOrdering, but a child may satisfy it through an
-      // ordering-CLAIM node ([[AssumeOrderedExec]]) whose promise the
-      // planner cannot check — so the merge verifies as it streams (one
-      // compare per consumed row, no copies beyond the existing carry)
-      // and throws instead of silently emitting wrong matches.
       var prevLe: Any = null
       var prevLtNull = true
       var prevLt = 0L
       var haveLPrev = false
-      def orderViolation(side: String, e: Any, t: Any): Nothing =
-        throw new IllegalStateException(
-          s"as-of merge: $side side not sorted by (entity, ts) — saw " +
-            s"($e, $t) after a later row; an ordering claim " +
-            "(AsOfNative.assumeSorted) on unsorted data?")
-      lIter.map { lRow =>
+      val out = lIter.map { lRow =>
         val le = lRow.get(lEntityIdx, entityType)
         val ltNull = lRow.isNullAt(lTsIdx)
         val lt = if (ltNull) 0L else lRow.getLong(lTsIdx)
@@ -196,28 +227,15 @@ case class AsOfJoinExec(
           if (ec < 0 || (ec == 0 && tsCmp(ltNull, lt, prevLtNull, prevLt) < 0))
             orderViolation("left", le, if (ltNull) null else lt)
           // copy the held entity only when it CHANGES (same rule as the
-          // carry below) — one clone per entity, not one per left row
+          // right head above) — one clone per entity, not one per left row
           if (ec != 0) prevLe = InternalRow.copyValue(le)
         } else prevLe = InternalRow.copyValue(le)
         prevLtNull = ltNull
         prevLt = lt
         haveLPrev = true
         while (!rHeadDone && rightApplies(le, ltNull, lt)) {
-          // absorb this right row into the carry (copies — the sorter
-          // reuses row objects); first verify the right stream really is
-          // non-decreasing vs the previous absorbed row
-          val rtNull = rHead.isNullAt(rTsIdx)
-          val rt = if (rtNull) 0L else rHead.getLong(rTsIdx)
-          val re = rHead.get(rEntityIdx, entityType)
-          val reCmp = if (hasCarry) entityOrd(re, carryEntity) else 1
-          if (hasCarry &&
-              (reCmp < 0 || (reCmp == 0 &&
-                tsCmp(rtNull, rt, carryTsNull, carryTs) < 0)))
-            orderViolation("right", re, if (rtNull) null else rt)
-          // copy the entity only when it CHANGES (the sorter reuses row
-          // buffers, so a held reference must be a copy — but one copy
-          // per entity, not one per absorbed row)
-          if (reCmp != 0) carryEntity = InternalRow.copyValue(re)
+          // absorb the head into the carry (copies — the sorter reuses
+          // row objects)
           var vi = 0
           while (vi < rValIdxArr.length) {
             val ri = rValIdxArr(vi)
@@ -232,17 +250,23 @@ case class AsOfJoinExec(
             }
             vi += 1
           }
-          if (rtNull) carry.setNullAt(carrySchema.length - 1)
-          else carry.setLong(carrySchema.length - 1, rt)
-          carryTsNull = rtNull
-          carryTs = rt
+          if (rHeadTsNull) carry.setNullAt(carrySchema.length - 1)
+          else carry.setLong(carrySchema.length - 1, rHeadTs)
+          carryEntity = rHeadEntity
           hasCarry = true
-          if (rIter.hasNext) rHead = rIter.next() else { rHeadDone = true; rHead = null }
+          advanceRight()
         }
         val matches = hasCarry && entityOrd(carryEntity, le) == 0
         numOutputRows += 1
         if (matches) numMatched += 1
         project(joined(lRow, if (matches) carry else nullCarry))
+      }
+      new Iterator[InternalRow] {
+        def hasNext: Boolean = out.hasNext || {
+          while (!rHeadDone) advanceRight()
+          false
+        }
+        def next(): InternalRow = out.next()
       }
     }
   }
@@ -252,61 +276,52 @@ case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Ordering CLAIM: pass-through node declaring that its child's rows are
-  * already sorted by `orderCols` within each partition — problem
-  * knowledge the optimizer cannot derive (guide §8), e.g. "a per-doc
-  * frame array explodes in frame order, so sorting the COMPACT doc rows
-  * by key makes the exploded stream (key, ts)-sorted" — which lets
-  * EnsureRequirements skip a full sort of the exploded timeline.
-  *
-  * A false claim CANNOT silently corrupt an as-of join: AsOfJoinExec
-  * verifies both input streams' ordering as it merges and throws. */
-case class AssumeOrderedNode(child: LogicalPlan, orderCols: Seq[Attribute])
-    extends org.apache.spark.sql.catalyst.plans.logical.UnaryNode {
-  override def output: Seq[Attribute] = child.output
-  override protected def withNewChildInternal(c: LogicalPlan): AssumeOrderedNode =
-    copy(child = c)
-}
-
-case class AssumeOrderedExec(child: SparkPlan, orderCols: Seq[Attribute])
-    extends org.apache.spark.sql.execution.UnaryExecNode {
-  override def output: Seq[Attribute] = child.output
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] =
-    orderCols.map(a => SortOrder(a, Ascending))
-  override protected def doExecute(): RDD[InternalRow] = child.execute()
-  override protected def withNewChildInternal(c: SparkPlan): AssumeOrderedExec =
-    copy(child = c)
-}
-
-/** Planner strategy lowering the logical node; injected per-session via
-  * spark.experimental.extraStrategies (no session-construction-time
-  * extension needed). */
-object AsOfJoinStrategy extends SparkStrategy {
-  def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case n: AsOfJoinNode =>
-      AsOfJoinExec(n.leftEntity, n.leftTs, n.rightEntity, n.rightTs,
-        n.rightValues, n.strict, n.matchedTs,
-        planLater(n.left), planLater(n.right)) :: Nil
-    case n: AssumeOrderedNode =>
-      AssumeOrderedExec(planLater(n.child), n.orderCols) :: Nil
-    case _ => Nil
-  }
-}
-
-/** Optimizer BARRIER: [[AssumeOrderedNode]] with no ordering claim — a
-  * pass-through the optimizer cannot push predicates or pruning through.
-  * Use it between an expensive aliased array computation and an explode:
+/** Optimizer BARRIER: a pass-through the optimizer cannot push
+  * predicates or pruning through. It claims nothing: its output
+  * partitioning and ordering are its child's. Use it between an
+  * expensive aliased array computation and an explode:
   * InferFiltersFromGenerate adds a size(child)>0 filter above every
   * explode, and predicate pushdown substitutes the full expression into
   * it (evaluating e.g. a frame loop 3x per row); above the barrier the
   * filter tests the already-computed column. Project exactly the needed
   * columns BELOW the barrier — column pruning stops at it too. */
+case class PlanBarrierNode(child: LogicalPlan)
+    extends org.apache.spark.sql.catalyst.plans.logical.UnaryNode {
+  override def output: Seq[Attribute] = child.output
+  override protected def withNewChildInternal(c: LogicalPlan): PlanBarrierNode =
+    copy(child = c)
+}
+
+case class PlanBarrierExec(child: SparkPlan)
+    extends org.apache.spark.sql.execution.UnaryExecNode {
+  override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+  override protected def doExecute(): RDD[InternalRow] = child.execute()
+  override protected def withNewChildInternal(c: SparkPlan): PlanBarrierExec =
+    copy(child = c)
+}
+
+/** Planner strategy lowering the logical nodes; installed on the session
+  * by [[AsOfNative.install]] (or at session build by GraftExtensions). */
+object AsOfJoinStrategy extends SparkStrategy {
+  def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case n: AsOfJoinNode =>
+      AsOfJoinExec(n.leftEntity, n.leftTs, n.rightEntity, n.rightTs,
+        n.rightValues, n.strict, n.presorted, n.matchedTs,
+        planLater(n.left), planLater(n.right)) :: Nil
+    case n: PlanBarrierNode =>
+      PlanBarrierExec(planLater(n.child)) :: Nil
+    case _ => Nil
+  }
+}
+
 object PlanBarrier {
+  /** `df` behind a [[PlanBarrierNode]]. */
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     AsOfNative.install(spark)
-    Bridge.ofRows(spark, AssumeOrderedNode(df.queryExecution.analyzed, Nil))
+    Bridge.ofRows(spark, PlanBarrierNode(df.queryExecution.analyzed))
   }
 }
 
@@ -317,58 +332,5 @@ object AsOfNative {
     val cur = spark.experimental.extraStrategies
     if (!cur.exists(_.isInstanceOf[AsOfJoinStrategy.type]))
       spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-  }
-
-  /** Declare `df` already sorted by `cols` within each partition (see
-    * [[AssumeOrderedNode]]); feed the result to [[join]] to skip the
-    * planner's sort on that side. The claim is VERIFIED row-by-row by
-    * the merge — unsorted data fails loudly, never silently. */
-  def assumeSorted(df: DataFrame, cols: String*): DataFrame = {
-    val spark = df.sparkSession
-    install(spark)
-    val lp = df.queryExecution.analyzed
-    val attrs = cols.map(c => lp.output.find(_.name == c).getOrElse(
-      throw new IllegalArgumentException(
-        s"no column $c in ${lp.output.map(_.name)}")))
-    Bridge.ofRows(spark, AssumeOrderedNode(lp, attrs))
-  }
-
-  /** Native as-of join; same contract as graft.operators.AsOf.join. */
-  def join(queries: DataFrame, features: DataFrame, entityCol: String,
-      tsCol: String, valueCols: Seq[String], strict: Boolean = false): DataFrame = {
-    require(features.schema(tsCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      queries.schema(tsCol).dataType ==
-      org.apache.spark.sql.types.LongType,
-      "native as-of join requires LongType ts columns (integer ns/us) on BOTH sides")
-    // the exec reads right-side fields with the LEFT side's data types —
-    // a silent cross-side dtype mismatch would read wrong bytes from the
-    // UnsafeRow, not error
-    require(queries.schema(entityCol).dataType ==
-      features.schema(entityCol).dataType,
-      s"entity dtype mismatch: queries ${queries.schema(entityCol).dataType} " +
-        s"vs features ${features.schema(entityCol).dataType}")
-    val spark = queries.sparkSession
-    install(spark)
-    val lp = queries.queryExecution.analyzed
-    val rp0 = features.queryExecution.analyzed
-    // self-join hygiene: custom nodes bypass the analyzer's
-    // DeduplicateRelations, so shared exprIds between the sides (queries
-    // and features derived from one table) would confuse column pruning —
-    // re-alias the right side with fresh exprIds when outputs overlap
-    val rp: LogicalPlan =
-      if (rp0.outputSet.intersect(lp.outputSet).isEmpty) rp0
-      else org.apache.spark.sql.catalyst.plans.logical.Project(
-        rp0.output.map(a =>
-          org.apache.spark.sql.catalyst.expressions.Alias(a, a.name)()), rp0)
-    def attr(p: LogicalPlan, name: String): Attribute =
-      p.output.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(s"no column $name in ${p.output.map(_.name)}"))
-    Bridge.ofRows(spark, AsOfJoinNode(lp, rp,
-      attr(lp, entityCol), attr(lp, tsCol),
-      attr(rp, entityCol), attr(rp, tsCol),
-      valueCols.map(c => attr(rp, c)), strict,
-      AttributeReference("matched_ts",
-        org.apache.spark.sql.types.LongType, nullable = true)()))
   }
 }

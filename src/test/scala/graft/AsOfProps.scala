@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** ScalaCheck properties (SURVEY.md §5): for arbitrary feature/query
   * timelines — small ts ranges to force duplicate-timestamp collisions —
-  * the as-of join (window rewrite AND native exec) equals an in-memory
-  * brute force, and every matched row satisfies feature.ts <= query.ts
+  * the as-of join (the reference spec AND the native exec) equals an
+  * in-memory brute force, and every matched row satisfies feature.ts <= query.ts
   * (zero temporal leakage; strict mode: <). */
 object AsOfProps extends Properties("asof") {
   lazy val spark = TestSpark.spark
@@ -54,7 +54,7 @@ object AsOfProps extends Properties("asof") {
       val qdf = qs.toDF("doc_id", "ts")
         .withColumn("doc_id", $"doc_id".cast("string"))
       Prop.all(Seq(false, true).map { strict =>
-        val win = graft.operators.AsOf.join(qdf, fdf, "doc_id", "ts",
+        val win = graft.operators.AsOf.referenceJoin(qdf, fdf, "doc_id", "ts",
           Seq("fv"), strict = strict)
           .select($"doc_id", $"ts", $"fv", $"matched_ts")
           .collect()
@@ -62,7 +62,7 @@ object AsOfProps extends Properties("asof") {
             (Option(r.get(3)).map(_.asInstanceOf[Long]),
               Option(r.get(2)).map(_.asInstanceOf[Double])))
           .toMap
-        val nat = graft.plans.AsOfNative.join(qdf, fdf, "doc_id", "ts",
+        val nat = graft.operators.AsOf.join(qdf, fdf, "doc_id", "ts",
           Seq("fv"), strict = strict)
           .select($"doc_id", $"ts", $"fv", $"matched_ts")
           .collect()
@@ -82,37 +82,43 @@ object AsOfProps extends Properties("asof") {
       }: _*)
     }
 
-  /** Regression for the round-1 joinKeyed bug: composite keys were packed
-    * with concat_ws("") so entity "a" + bucket 12 collided with entity
-    * "a1" + bucket 2. joinKeyed now partitions the window by the column
+  /** Regression for the round-1 composite-key bug: keys were packed with
+    * concat_ws("") so entity "a" + bucket 12 collided with entity "a1" +
+    * bucket 2. The bucketed join now keys on a struct of the column
     * TUPLE; this property generates prefix-extension entity ids ("a",
-    * "a1", "a12", "1", "12") with single-digit-adjacent timestamps and
-    * bucket widths, and demands bucketed ≡ plain on every sample. */
+    * "a1", "a12", "1", "12") plus NULL ids, with single-digit-adjacent
+    * timestamps and bucket widths, and demands bucketed ≡ the reference
+    * spec on every sample. Every feature's own ts is also queried: the
+    * equal-timestamp edge where an inclusive join and a strict one
+    * differ, checked to match that very feature. */
   property("joinBucketed == join under prefix-colliding string ids") =
     forAll(
       Gen.listOfN(14, for {
-        e <- Gen.oneOf("a", "a1", "a12", "1", "12")
+        e <- Gen.option(Gen.oneOf("a", "a1", "a12", "1", "12"))
         t <- Gen.choose(0L, 30L)
         v <- Gen.choose(-5, 5).map(_.toDouble)
       } yield (e, t, v)),
       Gen.nonEmptyListOf(for {
-        e <- Gen.oneOf("a", "a1", "a12", "1", "12")
+        e <- Gen.option(Gen.oneOf("a", "a1", "a12", "1", "12"))
         t <- Gen.choose(0L, 30L)
       } yield (e, t)),
       Gen.oneOf(1L, 2L, 3L, 7L)) { (featsRaw, qsRaw, width) =>
       val feats = featsRaw.groupBy(f => (f._1, f._2))
         .map { case ((e, t), rows) => (e, t, rows.map(_._3).max) }.toList
-      val qs = qsRaw.distinct
+      val ties = feats.map(f => (f._1, f._2)).toSet
+      val qs = (qsRaw ++ ties).distinct
       val fdf = feats.toDF("doc_id", "ts", "fv")
       val qdf = qs.toDF("doc_id", "ts")
       def key(df: org.apache.spark.sql.DataFrame) = df
         .select($"doc_id", $"ts", $"fv", $"matched_ts").collect()
-        .map(r => (r.getString(0), r.getLong(1)) ->
+        .map(r => (Option(r.getString(0)), r.getLong(1)) ->
           (Option(r.get(3)), Option(r.get(2)))).toMap
-      val plain = key(graft.operators.AsOf.join(qdf, fdf, "doc_id", "ts", Seq("fv")))
+      val plain = key(graft.operators.AsOf.referenceJoin(qdf, fdf, "doc_id", "ts", Seq("fv")))
       val bucketed = key(graft.operators.AsOf.joinBucketed(
         qdf, fdf, "doc_id", "ts", Seq("fv"), width))
-      Prop(bucketed == plain) :| s"width=$width plain=$plain bucketed=$bucketed"
+      val tiesInclusive = ties.forall(q => bucketed(q)._1.contains(q._2))
+      Prop(bucketed == plain) :| s"width=$width plain=$plain bucketed=$bucketed" &&
+        Prop(tiesInclusive) :| s"equal-ts query missed its own feature, width=$width"
     }
 
   property("continuous-time mean == in-memory weighted fold") =

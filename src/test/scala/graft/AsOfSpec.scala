@@ -93,7 +93,7 @@ class AsOfSpec extends AnyFunSuite {
       val (fs, qs) = randomCase(rnd)
       val fdf = fs.map(f => (f.doc_id, f.ts, f.v)).toDF("doc_id", "ts", "fv")
       val qdf = qs.toDF("doc_id", "ts")
-      val plain = AsOf.join(qdf, fdf, "doc_id", "ts", Seq("fv"))
+      val plain = AsOf.referenceJoin(qdf, fdf, "doc_id", "ts", Seq("fv"))
         .orderBy("doc_id", "ts").collect().map(_.toSeq).toSeq
       val bucketed = AsOf.joinBucketed(qdf, fdf, "doc_id", "ts", Seq("fv"), 7L)
         .orderBy("doc_id", "ts").collect().map(_.toSeq).toSeq
@@ -108,10 +108,9 @@ class AsOfSpec extends AnyFunSuite {
       val fdf = fs.map(f => (f.doc_id, f.ts, f.v)).toDF("doc_id", "ts", "fv")
       val qdf = qs.toDF("doc_id", "ts")
       for (strict <- Seq(false, true)) {
-        val window = AsOf.join(qdf, fdf, "doc_id", "ts", Seq("fv"), strict)
+        val window = AsOf.referenceJoin(qdf, fdf, "doc_id", "ts", Seq("fv"), strict)
           .orderBy("doc_id", "ts").collect().map(_.toSeq).toSeq
-        val native = graft.plans.AsOfNative.join(qdf, fdf, "doc_id", "ts",
-          Seq("fv"), strict)
+        val native = AsOf.join(qdf, fdf, "doc_id", "ts", Seq("fv"), strict)
           .orderBy("doc_id", "ts").collect().map(_.toSeq).toSeq
         assert(native == window, s"strict=$strict")
       }
@@ -121,42 +120,53 @@ class AsOfSpec extends AnyFunSuite {
   test("native as-of plan inserts one exchange + one sort per side") {
     val fdf = Seq(("d", 1L, 1.0)).toDF("doc_id", "ts", "fv")
     val qdf = Seq(("d", 2L)).toDF("doc_id", "ts")
-    val plan = graft.plans.AsOfNative.join(qdf, fdf, "doc_id", "ts", Seq("fv"))
+    val plan = AsOf.join(qdf, fdf, "doc_id", "ts", Seq("fv"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"))
     assert("Exchange hashpartitioning".r.findAllIn(plan).size <= 2)
   }
 
-  test("assumeSorted on truly-sorted input equals the planner-sorted join") {
-    val fdf = Seq(("a", 1L, 1.0), ("a", 5L, 2.0), ("b", 3L, 3.0))
-      .toDF("doc_id", "ts", "fv")
-      .repartition(1, org.apache.spark.sql.functions.col("doc_id"))
-      .sortWithinPartitions("doc_id", "ts")
-    val qdf = Seq(("a", 2L), ("a", 9L), ("b", 2L), ("b", 4L)).toDF("doc_id", "ts")
-    val plain = graft.plans.AsOfNative.join(qdf, fdf, "doc_id", "ts", Seq("fv"))
+  test("presorted join on truly-sorted input equals the planner-sorted join") {
+    def sorted1(df: org.apache.spark.sql.DataFrame) =
+      df.repartition(1, org.apache.spark.sql.functions.col("doc_id"))
+        .sortWithinPartitions("doc_id", "ts")
+    val fdf = sorted1(Seq(("a", 1L, 1.0), ("a", 5L, 2.0), ("b", 3L, 3.0))
+      .toDF("doc_id", "ts", "fv"))
+    val qdf = sorted1(Seq(("a", 2L), ("a", 9L), ("b", 2L), ("b", 4L)).toDF("doc_id", "ts"))
+    val plain = AsOf.join(qdf, fdf, "doc_id", "ts", Seq("fv"))
       .orderBy("doc_id", "ts").collect().map(_.toSeq).toSeq
-    val claimed = graft.plans.AsOfNative.join(qdf,
-      graft.plans.AsOfNative.assumeSorted(fdf, "doc_id", "ts"),
-      "doc_id", "ts", Seq("fv"))
-      .orderBy("doc_id", "ts").collect().map(_.toSeq).toSeq
-    assert(claimed == plain)
+    val claimed = AsOf.join(qdf, fdf, "doc_id", "ts", Seq("fv"), presorted = true)
+    val exec = claimed.queryExecution.executedPlan.collectFirst {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+    }.getOrElse(claimed.queryExecution.executedPlan)
+    // the claim drops the sort requirement, not the distribution
+    val asof = exec.collectFirst { case e: graft.plans.AsOfJoinExec => e }.get
+    assert(asof.requiredChildOrdering == Seq(Nil, Nil))
+    assert(asof.requiredChildDistribution.size == 2)
+    assert(claimed.orderBy("doc_id", "ts").collect().map(_.toSeq).toSeq == plain)
   }
 
-  test("a FALSE assumeSorted claim fails loudly, never silently") {
-    // deliberately unsorted feature stream in one partition; both sides
-    // single-partition so EnsureRequirements inserts no exchange (which
-    // would re-sort and mask the false claim)
-    val fdf = Seq(("a", 9L, 1.0), ("a", 1L, 2.0), ("a", 5L, 3.0))
-      .toDF("doc_id", "ts", "fv").coalesce(1)
-    val qdf = Seq(("a", 10L), ("a", 11L)).toDF("doc_id", "ts").coalesce(1)
-    val joined = graft.plans.AsOfNative.join(qdf,
-      graft.plans.AsOfNative.assumeSorted(fdf, "doc_id", "ts"),
-      "doc_id", "ts", Seq("fv"))
-    val e = intercept[org.apache.spark.SparkException] { joined.collect() }
+  test("a FALSE presorted claim fails loudly, never silently") {
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("not sorted by (entity, ts)")),
-      s"expected ordering-violation error, got: ${msgs(e)}")
+    for ((qs, fs, why) <- Seq(
+        (Seq(("a", 10L), ("a", 11L)), Seq(("a", 9L, 1.0), ("a", 1L, 2.0), ("a", 5L, 3.0)),
+          "out of order among absorbed rows"),
+        // the out-of-order row lies past the last query: only the drain
+        // after the left side runs out reads it
+        (Seq(("a", 3L)), Seq(("a", 5L, 1.0), ("a", 1L, 2.0)), "past the last query"),
+        // a later entity first: the merge never absorbs it, and never
+        // reaches the earlier entity behind it
+        (Seq(("a", 3L)), Seq(("b", 1L, 1.0), ("a", 1L, 2.0)), "behind a later entity"))) {
+      // each side one partition in its given row order: coalesce(1)
+      // inserts no exchange that would re-sort and mask the false claim
+      val joined = AsOf.join(qs.toDF("doc_id", "ts").coalesce(1),
+        fs.toDF("doc_id", "ts", "fv").coalesce(1),
+        "doc_id", "ts", Seq("fv"), presorted = true)
+      val m = msgs(intercept[org.apache.spark.SparkException] { joined.collect() })
+      assert(m.exists(_.contains("right side not sorted by (entity, ts)")),
+        s"$why: expected ordering-violation error, got: $m")
+    }
   }
 
   test("native as-of handles NULL entity keys like the window rewrite (no NPE)") {
@@ -168,8 +178,8 @@ class AsOfSpec extends AnyFunSuite {
       df.select($"doc_id", $"ts", $"fv", $"matched_ts").collect()
         .map(r => (Option(r.get(0)), r.getLong(1)) ->
           (Option(r.get(2)), Option(r.get(3)))).toMap
-    val win = key(AsOf.join(qs, fs, "doc_id", "ts", Seq("fv")))
-    val nat = key(graft.plans.AsOfNative.join(qs, fs, "doc_id", "ts", Seq("fv")))
+    val win = key(AsOf.referenceJoin(qs, fs, "doc_id", "ts", Seq("fv")))
+    val nat = key(AsOf.join(qs, fs, "doc_id", "ts", Seq("fv")))
     assert(nat == win)
     // null entities form their own timeline (the window groups them)
     assert(win((None, 4L)) == (Some(9.0), Some(3L)))
@@ -181,7 +191,7 @@ class AsOfSpec extends AnyFunSuite {
     val fs = Seq((1L, 5L, 1.5)).toDF("doc_id", "ts", "fv")
     val qs = Seq((1, 6L)).toDF("doc_id", "ts") // Int vs Long entity
     val e = intercept[IllegalArgumentException] {
-      graft.plans.AsOfNative.join(qs, fs, "doc_id", "ts", Seq("fv"))
+      AsOf.join(qs, fs, "doc_id", "ts", Seq("fv"))
     }
     assert(e.getMessage.contains("entity dtype mismatch"))
   }

@@ -1,8 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{PlanFingerprint, PlanProbes, Queries, Queries3,
-  Queries5, Queries6}
+import graft.engine.{PlanFingerprint, PlanProbes, Queries, Queries2, Queries3,
+  Queries4, Queries5, Queries6}
 
 /** Plan-shape regression net over the heavy gate chains (VERDICT r4 #3):
   * the scale-safety claims — capped bucket equi-joins, native one-pass
@@ -102,6 +102,29 @@ class PlanFingerprintSpec extends AnyFunSuite {
       fp.sortMergeJoins == 0)
     assert(fp.exchanges <= 2,
       s"epoch-shuffle assembly grew to ${fp.exchanges} exchanges")
+  }
+
+  test("every as-of gate (q2, q23, q50) runs on AsOfJoinExec, no last() window") {
+    def windows(df: org.apache.spark.sql.DataFrame) = {
+      val p = df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      p.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }
+    }
+    for ((name, df, nWindows) <- Seq(
+        ("q2", Queries.q2AsofJoin(spark, dir), 0),
+        // q23's one window is the carry table's row_number
+        ("q23", Queries2.q23AsofBucketed(spark, dir), 1),
+        ("q50", Queries4.q50AsofInterval(spark, dir), 0))) {
+      val fp = PlanFingerprint.of(df)
+      info(s"$name: ${fp.json}")
+      assert(fp.asofNative >= 1, s"$name has no AsOfJoinExec")
+      val ws = windows(df)
+      assert(ws.size == nWindows, s"$name windows: $ws")
+      assert(ws.forall(_.windowExpression.forall(_.toString.contains("row_number"))),
+        s"$name carries a window other than row_number: $ws")
+    }
   }
 
   test("window as-of (q2): no cartesian/NL stage") {

@@ -62,7 +62,7 @@ class PlanSpec extends AnyFunSuite {
     SequenceGen.queryTimeline(spark, 30, 5).write.parquet(s"$base/q")
     val feats = spark.read.parquet(s"$base/f")
     val queries = spark.read.parquet(s"$base/q")
-    val out = graft.plans.AsOfNative.join(queries, feats, "doc_id", "ts", Seq("fv"))
+    val out = graft.operators.AsOf.join(queries, feats, "doc_id", "ts", Seq("fv"))
     val p = plan(out)
     val exchanges = "Exchange".r.findAllIn(p).length
     assert(p.contains("AsOfJoin"), p)
@@ -74,7 +74,7 @@ class PlanSpec extends AnyFunSuite {
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val out2 = graft.plans.AsOfNative.join(queries, feats, "doc_id", "ts", Seq("fv"))
+      val out2 = graft.operators.AsOf.join(queries, feats, "doc_id", "ts", Seq("fv"))
       val nOut = out2.collect().length.toLong
       val exec = out2.queryExecution.executedPlan.collectFirst {
         case e: graft.plans.AsOfJoinExec => e

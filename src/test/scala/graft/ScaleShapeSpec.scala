@@ -86,6 +86,15 @@ class ScaleShapeSpec extends AnyFunSuite {
     assert(got == want)
   }
 
+  test("globalRowNumberByGroup refuses an input column named like its join-side scratch") {
+    val df = Seq((1L, "a", 0)).toDF("id", "grp", "__g")
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.Windows.globalRowNumberByGroup(df, "grp", "id")
+    }
+    assert(e.getMessage.contains("globalRowNumberByGroup output columns already exist: __g"),
+      e.getMessage)
+  }
+
   test("connectedComponents supports string node ids (lexicographic min label)") {
     // chain a—a1—a12 plus isolated pair z1—z2; prefix-extension ids on
     // purpose (the round-1 packed-key failure shape)

@@ -26,16 +26,16 @@ class TableLayoutSpec extends AnyFunSuite {
     TableLayout.writeBucketed(feats, "graft_feats_b", 4, "doc_id", Seq("doc_id", "ts"))
     TableLayout.writeBucketed(queries, "graft_queries_b", 4, "doc_id", Seq("doc_id", "ts"))
 
-    val out = graft.plans.AsOfNative.join(
+    val out = graft.operators.AsOf.join(
       spark.table("graft_queries_b"), spark.table("graft_feats_b"),
       "doc_id", "ts", Seq("fv"))
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"))
     assert(!plan.contains("Exchange"), s"expected exchange-free plan:\n$plan")
 
-    // and it still computes the right answer (vs the window rewrite over
+    // and it still computes the right answer (vs the reference spec over
     // the raw data)
-    val expected = graft.operators.AsOf.join(queries, feats, "doc_id", "ts", Seq("fv"))
+    val expected = graft.operators.AsOf.referenceJoin(queries, feats, "doc_id", "ts", Seq("fv"))
       .orderBy("doc_id", "ts").collect().map(_.toSeq).toSeq
     val got = out.orderBy("doc_id", "ts").collect().map(_.toSeq).toSeq
     assert(got == expected)

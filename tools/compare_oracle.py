@@ -1,9 +1,11 @@
 #!/usr/bin/env python3
-"""Driver-style oracle compare: for each query dumped by graft.Verify,
-run its DuckDB oracle SQL over the testdata parquet tables and compare
-row multisets (columns sorted by name, floats rounded to 6).
+"""The oracle compare: for each query dumped by graft.Verify, run its
+DuckDB oracle SQL over the testdata parquet tables and compare row
+multisets (columns sorted by name, floats rounded to 6 decimals and
+compared exactly). Exits 1 on any mismatch or error.
 
 Usage: compare_oracle.py <sfDir> <verifyOut> [query ...]
+(tools/oracle_gate.sh runs the Verify dump and then this compare.)
 """
 import sys, json, glob, math
 import duckdb, pandas as pd
@@ -16,8 +18,44 @@ for t in glob.glob(f"{sf}/*.parquet"):
     name = t.split("/")[-1].replace(".parquet", "")
     con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{t}'")
 
+
+def is_null(v):
+    return v is None or (isinstance(v, float) and math.isnan(v))
+
+
+def canon_obj(v):
+    """Sortable key for an object cell: NULL sorts first as (0,), every
+    other value as (1, v), recursively through lists — so a column mixing
+    NULLs with strings (or lists holding NULLs) sorts instead of raising
+    TypeError."""
+    if is_null(v):
+        return (0,)
+    if isinstance(v, list) or type(v).__name__ == "ndarray":
+        return (1, tuple(canon_obj(x) for x in v))
+    return (1, v)
+
+
+def canon(df):
+    df = df.copy()
+    for c in df.columns:
+        if df[c].dtype == object:
+            df[c] = df[c].map(canon_obj)
+        elif df[c].dtype.kind == "f":
+            # stringify the WHOLE column (not just NaN): a mixed str/float
+            # column would make sorted() raise TypeError on tied rows;
+            # repr(round(v, 6)) is identical on both faces iff the rounded
+            # values are (exact, not allclose: a tolerance once hid a
+            # float32-storage mismatch)
+            df[c] = df[c].round(6).map(
+                lambda v: "NaN" if isinstance(v, float) and
+                math.isnan(v) else repr(v))
+        elif str(df[c].dtype).startswith("u"):
+            df[c] = df[c].astype("int64")
+    return sorted(map(tuple, df.itertuples(index=False, name=None)))
+
+
 oracle = json.load(open(f"{out}/oracle_sql.json"))
-fail = 0
+fail = ok = 0
 for name in sorted(oracle):
     if only and name not in only:
         continue
@@ -30,26 +68,6 @@ for name in sorted(oracle):
             print(f"{name}: SCHEMA MISMATCH {list(exp.columns)} vs {list(got.columns)}")
             fail += 1
             continue
-
-        def canon(df):
-            df = df.copy()
-            for c in df.columns:
-                if df[c].dtype == object:
-                    df[c] = df[c].map(
-                        lambda v: tuple(v) if isinstance(v, (list,)) or
-                        type(v).__name__ == "ndarray" else v)
-                elif df[c].dtype.kind == "f":
-                    # stringify the WHOLE column (not just NaN): a mixed
-                    # str/float column would make sorted() raise TypeError
-                    # on tied rows; repr(round(v, 6)) is identical on both
-                    # faces iff the rounded values are
-                    df[c] = df[c].round(6).map(
-                        lambda v: "NaN" if isinstance(v, float) and
-                        math.isnan(v) else repr(v))
-                elif str(df[c].dtype).startswith("u"):
-                    df[c] = df[c].astype("int64")
-            return sorted(map(tuple, df.itertuples(index=False, name=None)))
-
         a, b = canon(exp), canon(got)
         if len(a) != len(b):
             print(f"{name}: ROWS {len(a)} oracle vs {len(b)} spark")
@@ -57,12 +75,16 @@ for name in sorted(oracle):
         elif a != b:
             bad = [i for i, (x, y) in enumerate(zip(a, b)) if x != y][:3]
             print(f"{name}: CONTENT MISMATCH at sorted idx {bad}")
-            for i in bad[:1]:
-                print(f"  oracle: {a[i]}\n  spark : {b[i]}")
+            i = bad[0]
+            cols = [c for c, x, y in zip(exp.columns, a[i], b[i]) if x != y]
+            print(f"  columns differing: {cols}")
+            print(f"  oracle: {a[i]}\n  spark : {b[i]}")
             fail += 1
         else:
             print(f"{name}: OK ({len(a)} rows)")
+            ok += 1
     except Exception as e:
-        print(f"{name}: ERROR {e}")
+        print(f"{name}: ERROR {type(e).__name__}: {e}")
         fail += 1
+print(f"{ok}/{ok + fail} OK")
 sys.exit(1 if fail else 0)
